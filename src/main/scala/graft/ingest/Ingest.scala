@@ -11,10 +11,10 @@ import org.apache.spark.sql.types._
   * One JSONL line = one API response page with `data[]` tweets,
   * `includes.tweets[]`/`includes.users[]`, and `errors[]`. The reference
   * parses pages one at a time in driver Python and bulk-inserts with
-  * `INSERT IGNORE` (first-wins PK dedup); here the whole ingest is one
-  * declarative job: schema'd permissive JSON scan (corrupt lines
-  * quarantined, not fatal — S1), nested-struct flattening as pure column
-  * expressions (P1/P2), URL unwind + in-text rewrite as a higher-order
+  * `INSERT IGNORE` (first-wins PK dedup); here every table is declared
+  * over one parse of the pages: schema'd permissive JSON scan (corrupt
+  * lines quarantined, not fatal — S1), nested-struct flattening as pure
+  * column expressions (P1/P2), URL unwind + in-text rewrite as a higher-order
   * fold (P3), entity explosion (P4), referenced-tweet demux (P5),
   * error-row synthesis + union (P8), and deterministic first-wins dedup
   * (P7: original sample before expansion files, per SURVEY §7.6.2).
@@ -210,14 +210,24 @@ object Ingest {
   }
 
   /** Full ingest: pages → deduped tweets/users + exploded entity tables
-    * + corrupt-line quarantine. One declarative job per output; Catalyst
-    * prunes the page struct down to the fields each output needs.
+    * + corrupt-line quarantine.
+    *
+    * The parsed pages are the one source of every output (tweets, users,
+    * entity tables, mention map, quarantine), so they sit behind a lazy
+    * `localCheckpoint`: the first job that touches them parses each line
+    * once and keeps the rows as executor blocks; every later output
+    * reads those blocks and plans over a leaf instead of the JSON scan.
+    * Construction submits no job. The blocks live as long as the returned
+    * DataFrames are reachable (the ContextCleaner frees them after).
+    * Like any local checkpoint they cannot be recomputed after executor
+    * loss — the same contract `Closure.resolveRoots` accepts.
     */
   def load(spark: SparkSession, originalPaths: Seq[String],
            expansionPaths: Seq[String] = Seq.empty): Loaded = {
     val pages0 = readPages(spark, originalPaths, original = true)
-    val pages = if (expansionPaths.isEmpty) pages0
-      else pages0.unionByName(readPages(spark, expansionPaths, original = false))
+    val pages = (if (expansionPaths.isEmpty) pages0
+      else pages0.unionByName(readPages(spark, expansionPaths, original = false)))
+      .localCheckpoint(eager = false)
 
     // the projection must reference at least one data column besides the
     // corrupt-record column (Spark disallows corrupt-only queries on raw

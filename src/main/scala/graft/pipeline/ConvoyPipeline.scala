@@ -21,7 +21,15 @@ import graft.stats.{TreeInput, TreeStats}
   *
   * The reference runs these as six separate driver scripts against
   * MariaDB with per-conversation round trips; here each stage is a
-  * DataFrame and only the final marts materialize.
+  * DataFrame. Two fan-out points are materialized once per run, like the
+  * tables the reference's stages hand each other: the parsed pages
+  * inside [[Ingest.load]], and the closure-enriched tweets (`withUr`),
+  * which feed `tweets_i`, the conversation ids, tree stats, `tweets_a`
+  * and both rollups. Both are lazy local checkpoints: the closure's eager
+  * edge checkpoint fills the first, and the first output that reads
+  * `withUr` fills the second. Their blocks live as long as the
+  * [[Outputs]] are reachable. A local checkpoint cannot be recomputed
+  * after executor loss — the contract `Closure.resolveRoots` accepts.
   */
 object ConvoyPipeline {
 
@@ -73,16 +81,17 @@ object ConvoyPipeline {
     val loaded = Ingest.load(spark, originalPaths, expansionPaths)
     val tweets = loaded.tweets
 
-    // stage 1: conversation ids with replies (filter + agg + distinct keys)
-    val conversationIds = tweets
-      .where(col("reply_count") > 0)
-      .groupBy(col("conversation_id")).agg(sum(col("reply_count")).as("replies"))
-      .select(col("conversation_id"))
-
     // stage 3: conversation→conversation edges from quote/retweet links
     val edges = conversationEdges(tweets)
     val withUr = Closure.enrich(tweets.drop("ur_conversation_id"), edges,
-      "conversation_id")
+      "conversation_id").localCheckpoint(eager = false)
+
+    // stage 1: conversation ids with replies (filter + agg + distinct keys);
+    // the closure adds no rows, so the enriched tweets carry the same ids
+    val conversationIds = withUr
+      .where(col("reply_count") > 0)
+      .groupBy(col("conversation_id")).agg(sum(col("reply_count")).as("replies"))
+      .select(col("conversation_id"))
 
     // stage 4: tree statistics (singleton fast path handled in-operator).
     // Error-placeholder tweets have NULL conversation ids and get no
@@ -118,7 +127,7 @@ object ConvoyPipeline {
     Sinks.mart(out.urls, s"$dir/tweet_urls_a", sortCols = Seq("url", "tweet_id"))
     Sinks.mart(out.mentions, s"$dir/tweet_mentions_a", sortCols = Seq("user_id", "tweet_id"))
     Sinks.mart(out.tweetStats, s"$dir/tweet_stats_i", sortCols = Seq("tweet_id"))
-    Sinks.mart(out.tweetsWide, s"$dir/tweets_a", sortCols = Seq("created_date"))
+    Sinks.mart(out.tweetsWide, s"$dir/tweets_a", sortCols = Seq("created_date", "tweet_id"))
     Sinks.mart(out.conversations, s"$dir/conversations_a")
     Sinks.mart(out.urConversations, s"$dir/ur_conversations_a")
     Sinks.quarantine(out.corrupt, s"$dir/_quarantine")

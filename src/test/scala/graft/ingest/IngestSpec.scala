@@ -1,5 +1,9 @@
 package graft.ingest
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 
 import graft.SparkSuite
@@ -109,6 +113,33 @@ class IngestSpec extends SparkSuite {
     assert(user(1).getAs[String]("error") == null)
     val ids = loaded.users.select("user_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 3L, 4L, 5L, 77L)) // no ghost row
+  }
+
+  test("constructing the ingest submits no job") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("ingest-load") => jobs.incrementAndGet()
+          case Some("ingest-sentinel") => sentinelSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("ingest-load", "Ingest.load construction")
+      try Ingest.load(spark, Seq(resource("pages_original.jsonl")),
+        Seq(resource("pages_expansion.jsonl")))
+      finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the sentinel's
+      // start arrives, every job started during construction is counted
+      sc.setJobGroup("ingest-sentinel", "listener bus drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(30, TimeUnit.SECONDS))
+      assert(jobs.get() == 0)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("duplicate key within ONE file keeps the first occurrence, even across splits") {

@@ -1,6 +1,10 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileSystem
 
 import graft.SparkSuite
 
@@ -85,6 +89,22 @@ class ConvoyPipelineSpec extends SparkSuite {
     val edges = ConvoyPipeline.conversationEdges(tweets)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(edges == Map(1L -> 2L, 7L -> 5L))
+  }
+
+  test("run + write parses the page corpus once") {
+    // Hadoop file-system read statistics count the bytes the JSONL scan
+    // pulls from disk (checkpoint blocks and shuffle files bypass them);
+    // without the two checkpoints each output re-read every page file
+    def fileBytesRead(): Long = FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    val pages = Seq(resource("pages_original.jsonl"), resource("pages_expansion.jsonl"))
+    val corpusBytes = pages.map(p => Files.size(Paths.get(p))).sum
+    val dir = Files.createTempDirectory("pipeline_parse_once").toString
+    val before = fileBytesRead()
+    ConvoyPipeline.write(ConvoyPipeline.run(spark, pages.take(1), pages.drop(1)), dir)
+    val read = fileBytesRead() - before
+    assert(read >= corpusBytes && read <= corpusBytes * 3 / 2,
+      s"read $read bytes for a $corpusBytes-byte corpus")
   }
 
   test("marts write to disk; id-list text sink reads back (S2/K4)") {
